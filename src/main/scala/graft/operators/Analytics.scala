@@ -119,8 +119,6 @@ object Analytics {
   def integrityAudit(fact: DataFrame, dim: DataFrame, factKey: String,
                      dimKey: String, factChecks: Seq[(String, Column)],
                      joinedChecks: Seq[(String, Column)] = Nil): DataFrame = {
-    val spark = fact.sparkSession
-    import spark.implicits._
     def one(name: String, n: DataFrame): DataFrame =
       n.select(lit(name).as("check"), col("n").cast("long").as("n_violations"))
     val orphans = one("orphan_fact_rows",

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.operators.TextOps.{normalized, shingles, tokens}
+import graft.operators.TextOps.{normalized, shingles}
 
 /** Document-deduplication operators for training-data pipelines: exact,
   * MinHash+LSH (Broder 1997; banding per Leskovec/Rajaraman/Ullman MMDS

@@ -966,7 +966,7 @@ object LogTable {
 
   private[graft] val DvDirName = "_graft_dv"
 
-  private def tailOf(path: String, levels: Int = 1): String =
+  private def tailOf(path: String, levels: Int): String =
     path.split('/').takeRight(levels + 1).mkString("/")
 
   /** The `"part/file"` tail of a scanned row's own file — paired with

@@ -119,6 +119,9 @@ object MergeOps {
     * any point leaves either the old table, or the new table, or the old
     * table recoverable at `<dest>.old` — never nothing (the reference gets
     * the same property from staging+MERGE, docs/reference.md:193-197).
+    * Callers run [[recoverSwap]] on `dest` BEFORE reading it: a read of a
+    * half-swapped table sees no table, and this swap would then drop the
+    * `.old` that held it.
     */
   def atomicSwapWrite(spark: org.apache.spark.sql.SparkSession,
                       df: DataFrame, dest: String): Unit = {
@@ -139,6 +142,30 @@ object MergeOps {
       sys.error(s"atomicSwapWrite: could not move $tmpP into place " +
         s"(previous table preserved at $oldP)")
     fs.delete(oldP, true)
+  }
+
+  /** Crash recovery for one write-temp-then-swap target — `dest` of
+    * [[atomicSwapWrite]] or one partition of [[compactionExecute]]. With
+    * the live `dest` present, any `.tmp`/`.old` sibling is residue (a
+    * pre-commit build, or a lost post-commit cleanup) and is discarded.
+    * With `dest` missing beside a `.old`, the crash hit between the two
+    * commit renames: promote the `.tmp` (complete — the live table only
+    * moves aside once the build has finished), failing that restore the
+    * `.old`. A lone `.tmp` is a first write that never committed and may
+    * be partial, so it is discarded.
+    */
+  private[graft] def recoverSwap(fs: org.apache.hadoop.fs.FileSystem,
+                                 dest: org.apache.hadoop.fs.Path): Unit = {
+    val tmpP = dest.suffix(".tmp")
+    val oldP = dest.suffix(".old")
+    if (fs.exists(dest) || !fs.exists(oldP)) {
+      fs.delete(tmpP, true)
+      fs.delete(oldP, true)
+    } else if (fs.exists(tmpP)) {
+      if (!fs.rename(tmpP, dest)) sys.error(s"recoverSwap: could not promote $tmpP")
+      fs.delete(oldP, true)
+    } else if (!fs.rename(oldP, dest))
+      sys.error(s"recoverSwap: could not restore $oldP")
   }
 
   /** Commit helper: rewrite only the date partitions present in `updated`
@@ -824,31 +851,14 @@ object MergeOps {
     val conf = spark.sparkContext.hadoopConfiguration
     val rootP = new org.apache.hadoop.fs.Path(tableRoot)
     val fs = rootP.getFileSystem(conf)
-    // Crash-recovery sweep BEFORE planning (otherwise the manifest would
-    // list residue dirs as partitions): for each interrupted swap, the
-    // live partition present means any `.tmp`/`.old` sibling is residue
-    // (pre-commit build, or post-commit cleanup loss) and is discarded; a
-    // missing live partition with a `.tmp` means the crash hit between
-    // the two commit renames AFTER the build completed — promote the tmp;
-    // failing that, restore the `.old`. Mirrors atomicSwapWrite's
-    // recoverability contract.
+    // crash-recovery sweep of interrupted partition swaps BEFORE
+    // planning, otherwise the manifest would list residue dirs as
+    // partitions
     fs.listStatus(rootP).map(_.getPath.getName)
       .filter(n => n.endsWith(".tmp") || n.endsWith(".old"))
       .map(n => n.stripSuffix(".tmp").stripSuffix(".old"))
-      .distinct.foreach { base =>
-        val baseP = new org.apache.hadoop.fs.Path(rootP, base)
-        val tmpP = new org.apache.hadoop.fs.Path(rootP, base + ".tmp")
-        val oldP = new org.apache.hadoop.fs.Path(rootP, base + ".old")
-        if (fs.exists(baseP)) { fs.delete(tmpP, true); fs.delete(oldP, true) }
-        else if (fs.exists(tmpP)) {
-          if (!fs.rename(tmpP, baseP))
-            sys.error(s"compactionExecute: could not promote $tmpP")
-          fs.delete(oldP, true)
-        } else if (fs.exists(oldP)) {
-          if (!fs.rename(oldP, baseP))
-            sys.error(s"compactionExecute: could not restore $oldP")
-        }
-      }
+      .distinct.foreach(base =>
+        recoverSwap(fs, new org.apache.hadoop.fs.Path(rootP, base)))
     val plan = compactionPlan(fileManifest(spark, tableRoot),
       "part", "file", "bytes", targetBytes, smallThreshold)
       .localCheckpoint(true) // the listing must not be re-taken mid-swap

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -72,7 +72,6 @@ object Multimodal {
     * plumbing is testable end-to-end.
     */
   def stubDecode(df: DataFrame, features: Int = 8): DataFrame = {
-    import df.sparkSession.implicits._
     val schema = StructType(df.schema.fields :+
       StructField("decoded_features", ArrayType(DoubleType)))
     val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(schema)

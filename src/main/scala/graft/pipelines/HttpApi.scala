@@ -37,19 +37,10 @@ object HttpApi {
     server
   }
 
-  /** JSON string escape (shared, graft.JsonUtil) — exception messages and
-    * captured logs routinely contain newlines.
+  /** JSON string escape (shared, graft.JsonUtil) — exception messages
+    * routinely contain newlines.
     */
   private def jsonStr(s: String): String = graft.JsonUtil.jstr(s)
-
-  /** Capture a pipeline run's stdout (the row-count lines) for the JSON
-    * `detail` field.
-    */
-  private def capture(body: => Unit): String = {
-    val out = new java.io.ByteArrayOutputStream()
-    Console.withOut(new java.io.PrintStream(out)) { body }
-    out.toString(StandardCharsets.UTF_8).trim
-  }
 
   /** `"mode"` (+ `"days"`) fields for the two fact-sync endpoints — the
     * reference includes them in both success and error bodies
@@ -80,13 +71,13 @@ object HttpApi {
         case ("GET", "/health") =>
           // main.py:210-222 shape (status/service/version) + the warehouse
           // probe detail the reference's Cloud Run health check cannot give
-          val out = capture { Main.run(spark, "health", params) }
+          val out = Main.run(spark, "health", params)
           respond(ex, 200,
             s"""{"status":"healthy","service":"$Service","version":"$Version","detail":${jsonStr(out)}}""")
         case ("POST", p) if p.startsWith("/sync/") =>
           val cmd = p.stripPrefix("/sync/")
           try {
-            val out = capture { Main.run(spark, cmd, params) }
+            val out = Main.run(spark, cmd, params)
             respond(ex, 200, s"""{"status":"success",${modeFields(cmd, params)}""" +
               s""""message":${jsonStr(s"$cmd sync completed successfully")},"detail":${jsonStr(out)}}""")
           } catch {

@@ -5,7 +5,7 @@ import java.time.LocalDate
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.GraftSession
-import graft.operators.{Dedup, MergeOps}
+import graft.operators.MergeOps
 import graft.schemas.ClickUpSchemas
 
 /** CLI mirroring the reference's six endpoints (main.py:22-207) and its
@@ -33,11 +33,12 @@ object Main {
       case Array(k, v) if k.startsWith("--") => k.drop(2) -> v
     }.toMap
     val spark = GraftSession.local()
-    try run(spark, cmd, opts)
+    try println(run(spark, cmd, opts))
     finally spark.stop()
   }
 
-  def run(spark: SparkSession, cmd: String, opts: Map[String, String]): Unit = {
+  /** Runs one command and returns its detail line (row counts). */
+  def run(spark: SparkSession, cmd: String, opts: Map[String, String]): String = {
     val in = opts.getOrElse("in", "raw")
     val wh = opts.getOrElse("warehouse", "warehouse")
     val days = opts.getOrElse("days", "60").toInt
@@ -65,6 +66,11 @@ object Main {
           raw("time_entries", ClickUpSchemas.rawTimeEntry)).localCheckpoint(true)
         MergeOps.csvBackup(staging, s"$wh/csv_backups/time_entries", stamp = Some(stamp))
         MergeOps.loadStaging(staging, s"$wh/staging_time_entries")
+        // finish a swap a crash interrupted BEFORE ensureTable: it would
+        // otherwise take the half-swapped fact for an absent one
+        val factP = new org.apache.hadoop.fs.Path(s"$wh/fact_time_entries")
+        MergeOps.recoverSwap(
+          factP.getFileSystem(spark.sparkContext.hadoopConfiguration), factP)
         MergeOps.ensureTable(spark, ClickUpSchemas.factTimeEntries, s"$wh/fact_time_entries")
         val fact = spark.read.schema(ClickUpSchemas.factTimeEntries)
           .parquet(s"$wh/fact_time_entries")
@@ -72,8 +78,8 @@ object Main {
           if (cmd == "refresh") MergeOps.mergeRefresh(fact, staging, days, today)
           else MergeOps.mergeFullReindex(fact, staging)
         MergeOps.atomicSwapWrite(spark, merged, s"$wh/fact_time_entries")
-        println(s"$cmd: fact rows = " +
-          spark.read.parquet(s"$wh/fact_time_entries").count())
+        s"$cmd: fact rows = " +
+          spark.read.parquet(s"$wh/fact_time_entries").count()
 
       case "lists" =>
         val dim = Pipelines.denormalizeLists(
@@ -82,25 +88,25 @@ object Main {
           raw("lists", ClickUpSchemas.rawList))
         MergeOps.csvBackup(dim, s"$wh/csv_backups/lists", stamp = Some(stamp))
         MergeOps.truncateLoad(dim, s"$wh/dim_lists")
-        println(s"lists: ${spark.read.parquet(s"$wh/dim_lists").count()} rows")
+        s"lists: ${spark.read.parquet(s"$wh/dim_lists").count()} rows"
 
       case "tasks" =>
         val dim = Pipelines.transformTasks(raw("tasks", ClickUpSchemas.rawTask))
         MergeOps.csvBackup(dim, s"$wh/csv_backups/tasks", stamp = Some(stamp))
         MergeOps.truncateLoad(dim, s"$wh/dim_tasks")
-        println(s"tasks: ${spark.read.parquet(s"$wh/dim_tasks").count()} rows")
+        s"tasks: ${spark.read.parquet(s"$wh/dim_tasks").count()} rows"
 
       case "accounts" =>
         val dim = Pipelines.transformAccounts(raw("accounts", ClickUpSchemas.rawTask))
         MergeOps.csvBackup(dim, s"$wh/csv_backups/accounts", stamp = Some(stamp))
         MergeOps.truncateLoad(dim, s"$wh/dim_accounts")
-        println(s"accounts: ${spark.read.parquet(s"$wh/dim_accounts").count()} rows")
+        s"accounts: ${spark.read.parquet(s"$wh/dim_accounts").count()} rows"
 
       case "apps" =>
         val dim = Pipelines.transformApps(raw("apps", ClickUpSchemas.rawTask))
         MergeOps.csvBackup(dim, s"$wh/csv_backups/apps", stamp = Some(stamp))
         MergeOps.truncateLoad(dim, s"$wh/dim_apps")
-        println(s"apps: ${spark.read.parquet(s"$wh/dim_apps").count()} rows")
+        s"apps: ${spark.read.parquet(s"$wh/dim_apps").count()} rows"
 
       case "health" =>
         // main.py:210-222 analog: session + warehouse reachability
@@ -111,7 +117,7 @@ object Main {
           catch { case _: Throwable => "absent" }
           s"$t=$n"
         }
-        println(s"healthy ${status.mkString(" ")}")
+        s"healthy ${status.mkString(" ")}"
 
       case other => sys.error(s"unknown command: $other\n$describe")
     }

@@ -838,7 +838,6 @@ object LogTableTimeTravelRule extends Rule[LogicalPlan] {
   import org.apache.spark.sql.catalyst.analysis.{RelationTimeTravel,
     UnresolvedRelation}
   import org.apache.spark.sql.catalyst.expressions.Literal
-  import org.apache.spark.sql.catalyst.TableIdentifier
   import org.apache.spark.sql.types.{StringType, TimestampType}
 
   override def apply(plan: LogicalPlan): LogicalPlan = {

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, AttributeSet, BindReferences, Descending, Expression, JoinedRow, SortOrder, SpecificInternalRow, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
@@ -162,11 +162,10 @@ case class RunningSumExec(groupExprs: Seq[Expression],
     // FAILS (truncated lineage) rather than silently recomputing into
     // different partition contents than the collected offsets (r10
     // ADVICE).
-    // policy (spark.graft.runningSum.pin): "auto" re-reads when safe,
-    // "always" pins unconditionally — the memory-vs-resort trade is
-    // measured in PERF.md r11 (pinning re-reads cached sorted rows;
-    // re-reading re-runs the sort in pass 2 but never doubles storage)
-    val pinPolicy = conf.getConfString("spark.graft.runningSum.pin", "auto")
+    // An unconditional pin measured within noise of re-reading (PERF.md
+    // r11), so storage decides: pinning copies the sorted rows into
+    // block storage, re-reading re-runs the sort in pass 2 but never
+    // doubles storage.
     val raw = child.execute()
     val grouped = boundGroups.nonEmpty
     // small-input fast path (r12 directive #3): with a single child
@@ -183,11 +182,10 @@ case class RunningSumExec(groupExprs: Seq[Expression],
     // coalesced shuffle partition with ties in the sort key can replay
     // in a different row order on task retry, reattaching cumulative
     // values to different rows, so the pin condition is evaluated here
-    // exactly as on the multi-partition path (auto + determinate map
-    // side still skips it, keeping the x129/x134 constant-cost win).
+    // exactly as on the multi-partition path (a determinate map side
+    // still skips it, keeping the x129/x134 constant-cost win).
     def pinIfNeeded(rdd: org.apache.spark.rdd.RDD[InternalRow]) =
-      if (pinPolicy != "always" &&
-          org.apache.spark.sql.graftshim.RddShim.mapSideDeterminate(rdd))
+      if (org.apache.spark.sql.graftshim.RddShim.mapSideDeterminate(rdd))
         rdd
       else rdd.map(_.copy()).localCheckpoint()
     if (raw.getNumPartitions <= 1)

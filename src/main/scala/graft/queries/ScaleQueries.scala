@@ -6,7 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.operators.{Analytics, ClusterOps, Dedup, DedupOps, GraphOps, Multimodal, SimilarityOps, TextOps}
+import graft.operators.{Analytics, ClusterOps, DedupOps, GraphOps, Multimodal, SimilarityOps, TextOps}
 import graft.queries.QuerySpec.{t, tw}
 import graft.streaming.Streams
 

@@ -357,15 +357,6 @@ object Streams {
       spark.read.parquet(s"$dir/events.parquet").schema
     }
 
-  /** Run `body` with spark.sql.legacy.parquet.nanosAsLong set, restoring
-    * the previous value afterwards — a shared session must not have every
-    * later parquet read silently reinterpret nanos columns as longs.
-    * The conf stays set for the whole (bounded) streaming run because the
-    * file source consults it at scan time, not plan time.
-    */
-  private def withNanosAsLong[A](spark: SparkSession)(body: => A): A =
-    withConf(spark, "spark.sql.legacy.parquet.nanosAsLong", "true")(body)
-
   /** Confs for the bounded-replay runners (`run*AvailableNow` — memory
     * sink + AvailableNow, the test/dev harness surface): nanosAsLong for
     * the file source, plus a LOW state-partition count. A stateful
@@ -1179,6 +1170,7 @@ object Streams {
         val conf = spark.sparkContext.hadoopConfiguration
         val factP = new org.apache.hadoop.fs.Path(factPath)
         val fs = factP.getFileSystem(conf)
+        MergeOps.recoverSwap(fs, factP)
         // only a genuinely-absent fact is treated as empty; any read error
         // on an existing table must abort the batch — an empty `fact` here
         // would make the merge silently truncate all out-of-window history
@@ -1219,55 +1211,11 @@ object Streams {
     * slices' ids — graded by st4 against the SAME DuckDB oracle as
     * m1_merge_refresh. If an id appears in several slices, the last slice
     * wins (the stream's arrival-order analogue of D1 keep-latest).
-    */
-  def streamingMergeIncremental(spark: SparkSession, entries: DataFrame,
-                                factPath: String, seenIdsPath: String,
-                                days: Int, todayOslo: LocalDate,
-                                checkpoint: String,
-                                dateCol: String = "start_date_oslo",
-                                keyCol: String = "id",
-                                prepBatch: DataFrame => DataFrame = identity): Unit = {
-    val lo = lit(java.sql.Date.valueOf(todayOslo.minusDays(days.toLong)))
-    val hi = lit(java.sql.Date.valueOf(todayOslo))
-    def inWindow(c: org.apache.spark.sql.Column) =
-      coalesce(c.between(lo, hi), lit(false))
-    val q = entries.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val bw = prepBatch(batch).filter(inWindow(col(dateCol)))
-        bw.select(col(keyCol)).write.mode(SaveMode.Append).parquet(seenIdsPath)
-        val conf = spark.sparkContext.hadoopConfiguration
-        val factP = new org.apache.hadoop.fs.Path(factPath)
-        val fs = factP.getFileSystem(conf)
-        val fact =
-          if (fs.exists(factP)) spark.read.parquet(factPath)
-          else spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], bw.schema)
-        val upserted = fact
-          .join(broadcast(bw.select(col(keyCol))), Seq(keyCol), "left_anti")
-          .unionByName(bw)
-        MergeOps.atomicSwapWrite(spark, upserted, factPath)
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    // end-of-cycle sweep: in-window fact rows must have been asserted by
-    // some slice this cycle; out-of-window (and null-date) rows are history
-    // and survive untouched — same guard as MergeOps.mergeRefresh
-    val fact = spark.read.parquet(factPath)
-    val seen = spark.read.parquet(seenIdsPath).distinct()
-    val swept = fact.filter(!inWindow(col(dateCol)))
-      .unionByName(fact.filter(inWindow(col(dateCol)))
-        .join(seen, Seq(keyCol), "left_semi"))
-    MergeOps.atomicSwapWrite(spark, swept, factPath)
-  }
-
-  /** [[streamingMergeIncremental]] against a DATE-PARTITIONED fact — the
-    * scale path, graded as st4. The full-table variant above swaps the
-    * whole fact per micro-batch (read + rewrite — O(table) per batch,
-    * which at 100 TB is the whole table once per trigger). Here each batch
-    * runs [[MergeOps.upsertPartitioned]] — rewriting only the batch's date
+    *
+    * The fact is DATE-PARTITIONED so that no batch swaps the whole fact
+    * (read + rewrite — O(table) per batch, which at 100 TB is the whole
+    * table once per trigger). Each batch runs
+    * [[MergeOps.upsertPartitioned]] — rewriting only the batch's date
     * partitions plus the old partitions of moved ids — and the end-of-cycle
     * windowed delete runs [[MergeOps.sweepPartitionedWindow]] over window
     * partitions only. Per-batch WRITE cost: O(batch + affected
@@ -1276,9 +1224,7 @@ object Streams {
     * probe either reads (keyCol, dateCol) — column-pruned — across all
     * partitions, or, with `indexPath` set, probes a bucketed id→date
     * index with partition pruning; see [[MergeOps.upsertPartitioned]] for
-    * the precise cost statement. Same slicing contract and same final
-    * fact as the full-table variant: byte-equal to single-shot
-    * `MergeOps.mergeRefresh`, graded against the identical m1 oracle.
+    * the precise cost statement.
     *
     * The fact at `factPath` must be written `partitionBy(dateCol)`; if the
     * path does not exist yet, the first batch creates it.

@@ -25,7 +25,12 @@ class CliPipelineSpec extends SparkSpec {
        |"task_location":{"list_id":"l1","folder_id":"f1","space_id":"s1"}}
        |""".stripMargin.replaceAll("\n", "")
 
-  test("full_reindex then refresh preserves history (BUG_FIX integration)") {
+  // crash = a kill between atomicSwapWrite's two commit renames, which
+  // leaves no live fact: only `.old`, or `.old` beside the finished `.tmp`
+  for ((crash, label) <- Seq(None -> "",
+      Some(false) -> ", after a crash mid-swap left only .old",
+      Some(true) -> ", after a crash mid-swap left .tmp plus .old"))
+  test(s"full_reindex then refresh preserves history (BUG_FIX integration)$label") {
     val in = Files.createTempDirectory("graft_cli_in").toString
     val wh = Files.createTempDirectory("graft_cli_wh").toString
 
@@ -37,7 +42,12 @@ class CliPipelineSpec extends SparkSpec {
       entry("hist", jan1, jan1, 3600000L),
       entry("r1", feb25, feb25, 3600000L)))
     Main.run(spark, "full_reindex", Map("in" -> in, "warehouse" -> wh))
-    assert(spark.read.parquet(s"$wh/fact_time_entries").count() == 2)
+    val factDir = s"$wh/fact_time_entries"
+    assert(spark.read.parquet(factDir).count() == 2)
+    crash.foreach { builtTmp =>
+      Files.move(Paths.get(factDir), Paths.get(s"$factDir.old"))
+      if (builtTmp) spark.read.parquet(s"$factDir.old").write.parquet(s"$factDir.tmp")
+    }
 
     // Refresh with a 7-day window at 2024-03-01: r1 updated (duration
     // doubled, later `at`), r2 new; `hist` absent from staging but outside
@@ -49,10 +59,12 @@ class CliPipelineSpec extends SparkSpec {
     Main.run(spark, "refresh", Map("in" -> in2, "warehouse" -> wh,
       "days" -> "7", "today" -> "2024-03-01"))
 
-    val fact = spark.read.parquet(s"$wh/fact_time_entries")
+    val fact = spark.read.parquet(factDir)
     val byId = fact.collect().map(r =>
       r.getAs[String]("id") -> r.getAs[Double]("duration_hours")).toMap
     assert(byId == Map("hist" -> 1.0, "r1" -> 2.0, "r2" -> 0.5))
+    assert(!Files.exists(Paths.get(s"$factDir.old")))
+    assert(!Files.exists(Paths.get(s"$factDir.tmp")))
     // CSV backup written (M5)
     assert(Files.walk(Paths.get(wh, "csv_backups", "time_entries"))
       .anyMatch(p => p.toString.endsWith(".csv")))

@@ -149,7 +149,6 @@ class DedupMergeSpec extends SparkSpec {
 
   test("partitioned streaming merge: sliced batches upsert only affected " +
     "partitions, sweep deletes unseen window rows, history files untouched") {
-    import org.apache.spark.sql.streaming.Trigger
     val root = java.nio.file.Files.createTempDirectory("graft_stpart").toString
     val base = s"$root/fact"
     val today = LocalDate.parse("2024-03-01")
@@ -2672,7 +2671,7 @@ class DedupMergeSpec extends SparkSpec {
     "finite zone over a NaN-infected file silently drops NaN rows on " +
     "a one-sided probe; restat re-derives every zone under the " +
     "current contract in one commit and the rows come back") {
-    import graft.operators.{LogTable, TableLog}
+    import graft.operators.LogTable
     val root = java.nio.file.Files.createTempDirectory("graft_restat")
       .toString + "/t"
     val fs = new org.apache.hadoop.fs.Path(root)
@@ -3160,7 +3159,7 @@ class DedupMergeSpec extends SparkSpec {
     "one-version micro-batches instead of one giant batch, a restart " +
     "resumes rate-limiting from the CHECKPOINTED position, and the " +
     "folded aggregate stays exactly-once across the split") {
-    import graft.operators.{LogTable, TableLog}
+    import graft.operators.LogTable
     import graft.streaming.Streams
     val base = java.nio.file.Files.createTempDirectory("graft_mvpt")
       .toString
@@ -3412,7 +3411,7 @@ class DedupMergeSpec extends SparkSpec {
     "mid-snapshot resumes exactly-once from the checkpointed file " +
     "position, the feed then advances per-version, and consumerId " +
     "heartbeats the committed position for vacuum's guard") {
-    import graft.operators.{LogTable, TableLog}
+    import graft.operators.LogTable
     val base = java.nio.file.Files.createTempDirectory("graft_boot")
       .toString
     val fs = new org.apache.hadoop.fs.Path(base)
@@ -3949,7 +3948,7 @@ class DedupMergeSpec extends SparkSpec {
     "(r16 review): an unreferenced young DV dir survives a " +
     "minAgeMs vacuum — the window between a delete's vector write " +
     "and its commit CAS — and is reclaimed once aged") {
-    import graft.operators.{LogTable, TableLog}
+    import graft.operators.LogTable
     val base = java.nio.file.Files.createTempDirectory("graft_dvage")
       .toString
     val root = s"$base/t"

@@ -567,7 +567,7 @@ class ExtensionRuleSpec extends SparkSpec {
     "data files move, stats come from the SCAN path even under " +
     "footerStats=true (foreign writer), reads/pruning/DML/time-travel " +
     "all work afterwards, and non-Hive layouts fail loudly") {
-    import graft.operators.{LogTable, TableLog}
+    import graft.operators.LogTable
     val root = java.nio.file.Files.createTempDirectory("graft_conv")
       .toString + "/t"
     val fs = new org.apache.hadoop.fs.Path(root)
@@ -1486,7 +1486,7 @@ class ExtensionRuleSpec extends SparkSpec {
     "FileIndex with zone pruning intact, a DV'd head still applies " +
     "its vectors, a shadowing temp view falls through to Spark's own " +
     "error, and a pre-history timestamp fails loudly") {
-    import graft.operators.{LogTable, TableLog}
+    import graft.operators.LogTable
     val root = java.nio.file.Files.createTempDirectory("graft_sqltt")
       .toString + "/t"
     val fs = new org.apache.hadoop.fs.Path(root)

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 import graft.pipelines.Pipelines
 import graft.schemas.ClickUpSchemas
